@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.SparkSession
-import graft.sinks.JdbcSink
+import graft.sinks.PgCopySink
 import graft.sources.ParquetSource
 
 /** Object-key → readable URI resolution (reference: src/s3_download.rs).
@@ -27,8 +27,9 @@ object ObjectStore {
   * re-expressed Spark-first:
   *
   *   next_batch → one multi-path parquet scan → project desired_fields
-  *   → (optional) target-type casts → validated JDBC append →
-  *   mark each item completed.
+  *   → (optional) target-type casts → validated load through
+  *   [[PgCopySink.write]] (binary COPY into Postgres, batched INSERTs
+  *   into any other JDBC target) → mark each item completed.
   *
   * Differences by design, for 100 TB:
   *  - per-BATCH scan instead of per-file serial row loop: Spark splits
@@ -53,7 +54,7 @@ object Pipeline {
       // positional originals: duplicate desired_fields are projection-
       // legal (reference parquet_ops.rs) and must resolve aliases by
       // the user's field names, not the deduplicated column labels
-      total += JdbcSink.write(cast, cfg.db.connStr, cfg.db.tableName, aliases,
+      total += PgCopySink.write(cast, cfg.db.connStr, cfg.db.tableName, aliases,
         sourceFields = Some(cfg.parquet.desiredFields))
       batch.foreach(wl.markCompleted)
       batch = wl.nextBatch()

@@ -88,10 +88,10 @@ object EtlQueries {
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin
 
-  /** Full parquet→RDBMS→read-back roundtrip through the real JDBC sink
-    * (embedded Derby standing in for Postgres): a 10% keyed slice of
-    * lineitem is loaded via JdbcSink with aliasing, read back with
-    * spark.read.jdbc, and aggregated. The oracle computes the same
+  /** Full parquet→RDBMS→read-back roundtrip through the sink's INSERT
+    * branch (embedded Derby standing in for Postgres): a 10% keyed
+    * slice of lineitem is loaded via PgCopySink with aliasing, read back
+    * with spark.read.jdbc, and aggregated. The oracle computes the same
     * aggregates from the parquet directly — equality proves the sink
     * moved every row and every value bit-intact. */
   def jdbcRoundtrip(s: SparkSession, d: String): DataFrame = {
@@ -109,7 +109,7 @@ object EtlQueries {
     val slice = Tables.lineitem(s, d)
       .filter(pmod(col("l_orderkey"), lit(10)) === 0)
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-    graft.sinks.JdbcSink.write(slice, url, "rt_t", Map(
+    graft.sinks.PgCopySink.write(slice, url, "rt_t", Map(
       "l_orderkey" -> Some("order_id"), "l_quantity" -> Some("qty"),
       "l_extendedprice" -> Some("price")))
     s.read.format("jdbc").option("url", url).option("dbtable", "rt_t").load()
@@ -218,12 +218,10 @@ object EtlQueries {
     val mid = src.agg(max(col("order_id"))).head().getLong(0) / 2
     // round 1: initial half-load; rounds 2-3: catch-up from the
     // target's own watermark (round 3 finds nothing — a no-op)
-    graft.sinks.JdbcSink.write(src.filter(col("order_id") <= mid),
-      url, "inc_t", Map.empty[String, Option[String]])
+    graft.sinks.PgCopySink.write(src.filter(col("order_id") <= mid), url, "inc_t")
     for (_ <- 1 to 2) {
       val hw = highWatermark()
-      graft.sinks.JdbcSink.write(src.filter(col("order_id") > hw),
-        url, "inc_t", Map.empty[String, Option[String]])
+      graft.sinks.PgCopySink.write(src.filter(col("order_id") > hw), url, "inc_t")
     }
     s.read.format("jdbc").option("url", url).option("dbtable", "inc_t").load()
       .agg(count(lit(1)).as("n_rows"),

@@ -2,21 +2,15 @@ package graft.sinks
 
 import java.sql.DriverManager
 import scala.collection.mutable
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
-/** JDBC table sink — the Spark-native equivalent of the reference's
-  * binary `COPY FROM STDIN` loader (reference: src/db.rs):
+/** JDBC metadata for [[PgCopySink.write]]'s INSERT branch (any
+  * non-Postgres url; embedded Derby in the specs and gated queries).
   *
-  *  - connect-time validation of the parquet→db column mapping against
-  *    the live table schema: every dataframe column must land on an
-  *    existing db column, via the optional alias map (`parquet_to_db`)
-  *    or by bearing the same name; a missing column or unknown alias is
-  *    an error BEFORE any data moves (mirrors db.rs Db::connect).
-  *  - the write itself is Spark's batched-insert JDBC relation: one
-  *    connection per partition writing `batchsize` rows per round trip —
-  *    the distributed analogue of COPY (N executors stream in parallel
-  *    instead of one socket).
+  * Connect-time validation of the parquet→db column mapping against
+  * the live table schema: every dataframe column must land on an
+  * existing db column, via the optional alias map (`parquet_to_db`)
+  * or by bearing the same name; a missing column or unknown alias is
+  * an error BEFORE any data moves (mirrors db.rs Db::connect).
   */
 object JdbcSink {
 
@@ -61,41 +55,12 @@ object JdbcSink {
     }
   }
 
-  /** @param sourceFields the ORIGINAL parquet field names, positional
-    *   with df's columns — pass when upstream projection renamed
-    *   duplicates (desired_fields with repeats), so aliases resolve on
-    *   the user's names, not synthesized ones. Duplicate TARGETS are an
-    *   error either way (one insert cannot set a column twice). */
-  def write(df: DataFrame, url: String, table: String,
-      aliases: Map[String, Option[String]] = Map.empty,
-      batchSize: Int = 10000,
-      sourceFields: Option[Seq[String]] = None): Long = {
-    val dbCols = tableColumns(url, table)
-    if (dbCols.isEmpty)
-      throw new IllegalArgumentException(s"table '$table' does not exist in connected db")
-    val originals = sourceFields.getOrElse(df.columns.toSeq)
-    require(originals.length == df.columns.length,
-      s"sourceFields size ${originals.length} != dataframe width ${df.columns.length}")
-    val mapping = resolveColumns(originals, dbCols, aliases)
-    val targets = mapping.map(_._2)
-    require(targets.distinct.length == targets.length,
-      s"duplicate target column(s): ${targets.diff(targets.distinct).distinct.mkString(", ")}")
-    val renamed = df.select(df.columns.toSeq.zip(targets)
-      .map { case (c, t) => col(c).as(t) }: _*)
-    // persist across write+count: without it the count re-executes the
-    // whole upstream (a second scan of every source file per batch).
-    // Batch size is bounded by the caller (work-list batch /
-    // maxFilesPerTrigger), and MEMORY_AND_DISK spills if it isn't.
-    renamed.persist()
+  /** COUNT(*) of the target table. */
+  private[sinks] def tableCount(url: String, table: String): Long = {
+    val conn = DriverManager.getConnection(url)
     try {
-      renamed.write
-        .format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", batchSize.toString)
-        .mode("append")
-        .save()
-      renamed.count()
-    } finally renamed.unpersist()
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
+      rs.next(); rs.getLong(1)
+    } finally conn.close()
   }
 }

@@ -3,11 +3,11 @@ package graft.sinks
 import java.sql.DriverManager
 import org.apache.spark.sql.DataFrame
 
-/** Set-based JDBC upsert: stage the batch with the parallel batched-
-  * insert sink, then ONE `MERGE` from staging into the target — the
-  * production CDC-apply pattern (idempotent per batch, no per-row
-  * round trips; executors never hold write locks on the target, only
-  * the single MERGE statement does).
+/** Set-based JDBC upsert: stage the batch through [[PgCopySink.write]]
+  * (parallel batched inserts on a JDBC target), then ONE `MERGE` from
+  * staging into the target — the production CDC-apply pattern
+  * (idempotent per batch, no per-row round trips; executors never hold
+  * write locks on the target, only the single MERGE statement does).
   *
   * The reference loads append-only (db.rs COPY); this is the upsert
   * counterpart a change-feed consumer needs on the same warehouse.
@@ -48,7 +48,7 @@ object JdbcUpsert {
       try {
         conn.createStatement().execute(s"DELETE FROM $staging")
       } finally conn.close()
-      JdbcSink.write(batch, url, staging, Map.empty[String, Option[String]])
+      PgCopySink.write(batch, url, staging)
     } finally { batch.unpersist(); () }
     val sets = cols.filterNot(_ == key)
       .map(c => s"t.$c = s.$c").mkString(", ")

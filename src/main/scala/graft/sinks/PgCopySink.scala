@@ -1,9 +1,8 @@
 package graft.sinks
 
 import java.io.{ByteArrayOutputStream, DataOutputStream, InputStream}
-import java.sql.{Connection, DriverManager}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 
 /** PGCOPY binary encoder — the wire format `COPY ... FROM STDIN WITH
@@ -171,46 +170,52 @@ object PgBinaryCopy {
   }
 }
 
-/** Postgres fast-path sink: per-partition binary `COPY FROM STDIN`
+/** graft's one table sink: per-partition binary `COPY FROM STDIN`
   * over graft's own protocol-v3 client ([[PgWire]]) — the reference's
   * entire loading strategy (db.rs:167-177 BinaryCopyInWriter),
   * distributed across N executor partitions instead of one socket,
-  * and carrying NO driver-jar dependency (the r11 reflective
-  * CopyManager leg is gone; the wire client is live-accepted against
-  * PostgreSQL 15 in PgLiveSpec). Typically 2-5× a batched INSERT per
-  * connection on a real Postgres target.
+  * and carrying NO driver-jar dependency (the wire client is
+  * live-accepted against PostgreSQL 15 in PgLiveSpec). Typically 2-5×
+  * a batched INSERT per connection on a real Postgres target.
   *
-  * Non-postgres URLs transparently fall back to [[JdbcSink]]'s batched
-  * INSERTs — same validation, same row-count contract (fallback
-  * exercised against Derby in PgCopySpec; the encoder itself is
-  * golden-byte, roundtrip, and live-server proven). A postgres target
-  * whose schema has a column with no PG binary mapping fails loudly:
-  * with no driver jar there is no INSERT path to fall back to, and
-  * silently skipping columns would be worse.
+  * Non-postgres URLs take the batched-INSERT branch (Spark's JDBC
+  * relation, one connection per partition) — same validation, same
+  * row-count contract (exercised against Derby in PgCopySpec and
+  * EtlSpec; the encoder itself is golden-byte, roundtrip, and
+  * live-server proven). A postgres target whose schema has a column
+  * with no PG binary mapping fails loudly: with no driver jar there is
+  * no INSERT path to fall back to, and silently skipping columns would
+  * be worse.
   */
 object PgCopySink {
 
-  private[graft] def isPostgres(url: String): Boolean =
-    url.startsWith("jdbc:postgresql:")
+  /** Rows per round trip on the INSERT branch. */
+  private val InsertBatch = 10000
 
-  /** Same contract as JdbcSink.write (validation, aliasing, returned
-    * row count); routes to binary COPY when the target is Postgres and
-    * the driver + schema support it.
+  /** True for every connection-string form [[PgWire.parse]] reads. */
+  private[graft] def isPostgres(url: String): Boolean = PgWire.accepts(url)
+
+  /** Validate, alias and load `df` into `table`; returns the input row
+    * count. Routes to binary COPY when the target is Postgres, else to
+    * batched INSERTs.
+    *
+    * @param sourceFields the ORIGINAL parquet field names, positional
+    *   with df's columns — pass when upstream projection renamed
+    *   duplicates (desired_fields with repeats), so aliases resolve on
+    *   the user's names, not synthesized ones. Duplicate TARGETS are an
+    *   error either way (one insert cannot set a column twice).
     *
     * Semantics notes (vs the single-socket reference loader):
-    *  - at-least-once per partition: each partition COPYs in its own
+    *  - at-least-once per partition: each partition loads in its own
     *    autocommitted round trip, so a Spark task retry or speculative
     *    duplicate re-sends that partition. The returned count is the
-    *    EXACT input row count (renamed.count(), same contract as
-    *    JdbcSink); when `verifyCount` is on (default), write compares
-    *    the target table's before/after COUNT(*) delta against it and
-    *    throws if a retry actually double-loaded. (An accumulator
-    *    cannot detect this: Spark discards accumulator updates from
-    *    failed and speculative attempts, so it always equals the input
-    *    count even when a half-failed attempt's COPY committed.) The
-    *    delta check assumes this writer is the table's only concurrent
-    *    writer; disable it for huge targets where COUNT(*) is
-    *    prohibitive. Exactly-once needs a staging table + rename,
+    *    EXACT input row count, observed (`Dataset.observe`) in the pass
+    *    that loads the rows: like accumulators, observed metrics keep
+    *    only successful task attempts, so they cannot see a half-failed
+    *    attempt's committed load. Write therefore compares the table's
+    *    before/after COUNT(*) delta against that count and throws if a
+    *    retry double-loaded; this assumes it is the table's only
+    *    concurrent writer. Exactly-once needs a staging table + rename,
     *    which a caller can layer on top.
     *  - timestamps are encoded as the UTC instant (PG binary µs), which
     *    is correct for `timestamptz` targets or UTC server/session
@@ -218,91 +223,56 @@ object PgCopySink {
     *    non-UTC session observes the session shift. */
   def write(df: DataFrame, url: String, table: String,
       aliases: Map[String, Option[String]] = Map.empty,
-      batchSize: Int = 10000,
-      sourceFields: Option[Seq[String]] = None,
-      verifyCount: Boolean = true): Long = {
-    val encoders = df.schema.fields.map(f => PgBinaryCopy.fieldEncoder(f.dataType))
-    if (!isPostgres(url)) {
-      // The INSERT fallback has the same at-least-once hazard (per-
-      // partition autocommitted batches), so verifyCount applies to it
-      // too — the delta check must not silently vanish on fallback.
-      val before =
-        if (verifyCount && JdbcSink.tableColumns(url, table).nonEmpty)
-          Some(tableCount(url, table))
-        else None // missing table: let JdbcSink raise its own error
-      val n = JdbcSink.write(df, url, table, aliases, batchSize, sourceFields)
-      before.foreach { b =>
-        val landed = tableCount(url, table) - b
-        if (landed != n)
-          throw new IllegalStateException(
-            s"INSERT landed $landed rows for $n inputs — a task retry or " +
-              "speculative duplicate re-sent a partition (per-partition " +
-              "batches are at-least-once); de-duplicate the target or " +
-              "reload through a staging table")
-      }
-      return n
-    }
-
-    encoders.zip(df.schema.fields).foreach { case (e, f) =>
-      if (e.isEmpty) throw new IllegalArgumentException(
-        s"column '${f.name}': ${f.dataType.simpleString} has no PG binary " +
-          "mapping — project it away or load through a jdbc driver")
-    }
-    val target = PgWire.parse(url)
-    // connect-time validation + aliasing — identical to the INSERT path
-    // (mirrors db.rs Db::connect: fail before any data moves)
-    val dbCols = pgTableColumns(target, table)
+      sourceFields: Option[Seq[String]] = None): Long = {
+    // None: the INSERT branch
+    val pg = if (isPostgres(url)) Some(PgWire.parse(url)) else None
+    // connect-time validation + aliasing (mirrors db.rs Db::connect:
+    // fail before any data moves); only the column lookup differs
+    val dbCols = pg.fold(JdbcSink.tableColumns(url, table))(pgTableColumns(_, table))
     if (dbCols.isEmpty)
       throw new IllegalArgumentException(s"table '$table' does not exist in connected db")
     val originals = sourceFields.getOrElse(df.columns.toSeq)
     require(originals.length == df.columns.length,
       s"sourceFields size ${originals.length} != dataframe width ${df.columns.length}")
-    val mapping = JdbcSink.resolveColumns(originals, dbCols, aliases)
-    val targets = mapping.map(_._2)
+    val targets = JdbcSink.resolveColumns(originals, dbCols, aliases).map(_._2)
     require(targets.distinct.length == targets.length,
       s"duplicate target column(s): ${targets.diff(targets.distinct).distinct.mkString(", ")}")
     val renamed = df.select(df.columns.toSeq.zip(targets)
       .map { case (c, t) => col(c).as(t) }: _*)
 
-    val encs = encoders.map(_.get)
-    val colList = targets.map(t => s""""$t"""").mkString(", ")
-    val copySql = s"""COPY $table ($colList) FROM STDIN WITH (FORMAT binary)"""
-    // persist across copy+count (same rationale as JdbcSink: the exact
-    // count must not re-execute the upstream, and both passes must see
-    // the same rows)
-    renamed.persist()
-    try {
-      val before = if (verifyCount) pgTableCount(target, table) else 0L
-      renamed.foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          val conn = PgWire.connect(target)
-          try { conn.copyIn(copySql, new PgBinaryCopy.RowStream(rows, encs)); () }
-          finally conn.close()
+    def tableCount(): Long = pg.fold(JdbcSink.tableCount(url, table))(pgTableCount(_, table))
+    val before = tableCount()
+    val input = Observation()
+    val observed = renamed.observe(input, count(lit(1)).as("rows"))
+    pg match {
+      case Some(t) =>
+        val encs = df.schema.fields.map { f =>
+          PgBinaryCopy.fieldEncoder(f.dataType).getOrElse(throw new IllegalArgumentException(
+            s"column '${f.name}': ${f.dataType.simpleString} has no PG binary " +
+              "mapping — project it away or load through a jdbc driver"))
         }
-      }
-      val exact = renamed.count()
-      if (verifyCount) {
-        val landed = pgTableCount(target, table) - before
-        if (landed != exact)
-          throw new IllegalStateException(
-            s"COPY landed $landed rows for $exact inputs — a task retry " +
-              "or speculative duplicate re-sent a partition (per-" +
-              "partition COPY is at-least-once); de-duplicate the " +
-              "target or reload through a staging table")
-      }
-      exact
-    } finally renamed.unpersist()
-  }
-
-  /** COUNT(*) of the target table — the before/after delta is the only
-    * retry-duplication signal visible from the driver (executor-side
-    * accumulators never see failed-attempt commits). */
-  private def tableCount(url: String, table: String): Long = {
-    val conn = DriverManager.getConnection(url)
-    try {
-      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
-      rs.next(); rs.getLong(1)
-    } finally conn.close()
+        val colList = targets.map(c => s""""$c"""").mkString(", ")
+        val copySql = s"""COPY $table ($colList) FROM STDIN WITH (FORMAT binary)"""
+        observed.foreachPartition { (rows: Iterator[Row]) =>
+          if (rows.nonEmpty) {
+            val conn = PgWire.connect(t)
+            try { conn.copyIn(copySql, new PgBinaryCopy.RowStream(rows, encs)); () }
+            finally conn.close()
+          }
+        }
+      case None => observed.write.format("jdbc").option("url", url)
+        .option("dbtable", table).option("batchsize", InsertBatch.toString)
+        .mode("append").save()
+    }
+    val n = input.get("rows").asInstanceOf[Long]
+    val landed = tableCount() - before
+    if (landed != n)
+      throw new IllegalStateException(
+        s"$landed rows landed for $n inputs — a task retry or speculative " +
+          "duplicate re-sent a partition (per-partition loads are " +
+          "at-least-once); de-duplicate the target or reload through a " +
+          "staging table")
+    n
   }
 
   /** Columns of `table` in ordinal order, lower-cased, via the wire

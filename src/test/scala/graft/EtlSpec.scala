@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl._
-import graft.sinks.JdbcSink
+import graft.sinks.PgCopySink
 import graft.sources.{ParquetSource, SchemaDisplay}
 
 class EtlSpec extends AnyFunSuite {
@@ -836,7 +836,7 @@ class EtlSpec extends AnyFunSuite {
       Set("true", "false", null))
   }
 
-  // ---- JdbcSink vs embedded Derby --------------------------------------
+  // ---- PgCopySink's INSERT branch vs embedded Derby ---------------------
 
   private def derby(db: String) = s"jdbc:derby:memory:$db;create=true"
 
@@ -858,21 +858,21 @@ class EtlSpec extends AnyFunSuite {
     exec(url, "CREATE TABLE warehouse_t (customer_id BIGINT, customer_name VARCHAR(64), balance DOUBLE)")
     val df = Tables.customer(spark, sf)
       .select("c_custkey", "c_name", "c_acctbal").limit(50)
-    val n = JdbcSink.write(df, url, "warehouse_t",
+    val n = PgCopySink.write(df, url, "warehouse_t",
       Map("c_custkey" -> Some("customer_id"), "c_name" -> Some("customer_name"),
         "c_acctbal" -> Some("balance")))
     assert(n == 50)
     assert(queryLong(url, "SELECT COUNT(*) FROM warehouse_t") == 50)
 
     // unknown alias target
-    assertThrows[IllegalArgumentException](JdbcSink.write(df, url, "warehouse_t",
+    assertThrows[IllegalArgumentException](PgCopySink.write(df, url, "warehouse_t",
       Map("c_custkey" -> Some("not_a_col"))))
     // no alias and no same-named column
     assertThrows[IllegalArgumentException](
-      JdbcSink.write(df, url, "warehouse_t", Map.empty))
+      PgCopySink.write(df, url, "warehouse_t", Map.empty))
     // nonexistent table
     assertThrows[IllegalArgumentException](
-      JdbcSink.write(df, url, "no_such_table", Map.empty))
+      PgCopySink.write(df, url, "no_such_table", Map.empty))
   }
 
   test("jdbc sink surfaces db constraint violations (reference runner semantics)") {
@@ -882,7 +882,7 @@ class EtlSpec extends AnyFunSuite {
     val df = Tables.customer(spark, sf).limit(5)
       .select(lit(null).cast("bigint").as("customer_id"),
         col("c_name").as("note"))
-    val ex = intercept[Exception](JdbcSink.write(df, url, "strict_t"))
+    val ex = intercept[Exception](PgCopySink.write(df, url, "strict_t"))
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
     assert(messages(ex).exists(m => m != null && m.toLowerCase.contains("null")),
@@ -1262,7 +1262,7 @@ class EtlSpec extends AnyFunSuite {
     val df = Seq((1L, Array[Byte](1, 2, 3)), (2L, Array[Byte](-1, 0, 5)))
       .toDF("id", "payload")
     val cast = TypeMapping.castTo(df, Map("payload" -> "blob"))
-    assert(JdbcSink.write(cast, url, "bin_t") == 2)
+    assert(PgCopySink.write(cast, url, "bin_t") == 2)
     val back = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "bin_t").load()
     val got = back.collect()
@@ -1278,7 +1278,7 @@ class EtlSpec extends AnyFunSuite {
       .select(org.apache.spark.sql.functions.col("l_orderkey"))
     val sel = ParquetSource.selectFields(df, Seq("l_orderkey", "l_orderkey"))
     val ex = intercept[IllegalArgumentException] {
-      JdbcSink.write(sel, url, "dup_t", Map("l_orderkey" -> Some("a")),
+      PgCopySink.write(sel, url, "dup_t", Map("l_orderkey" -> Some("a")),
         sourceFields = Some(Seq("l_orderkey", "l_orderkey")))
     }
     assert(ex.getMessage.contains("duplicate target"))

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import graft.etl.{GraftConfig, Pipeline, WorkLists}
 import graft.sinks.{PgBinaryCopy, PgCopySink, PgServer, PgWire}
 
 /** Live-server acceptance of the whole Postgres load path — server
@@ -23,6 +24,9 @@ import graft.sinks.{PgBinaryCopy, PgCopySink, PgServer, PgWire}
   *  4. protocol error discipline: server errors surface as
   *     [[PgWire.PgServerException]] with SQLSTATE and the connection
   *     stays usable past the sync point.
+  *  5. the CLI's load loop: [[Pipeline.run]] from a YAML config whose
+  *     `conn_str` names the live server, fresh and resuming a `wip`
+  *     batch left by a crashed run.
   */
 class PgLiveSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -153,10 +157,118 @@ class PgLiveSpec extends AnyFunSuite {
       PgCopySink.write(bad, l.url, "graft_sink"))
     assert(e.getMessage.contains("no alias and no same-named column"))
     // retry-duplication detector: a second full write doubles the
-    // table (at-least-once is real), and verifyCount reports exact
-    // landed counts, so this second write SUCCEEDS with delta == input
+    // table (at-least-once is real), and the landed-vs-input check
+    // reads exact landed counts, so this second write SUCCEEDS with
+    // delta == input
     assert(PgCopySink.write(df, l.url, "graft_sink") == 1000)
     assert(psql(l, "SELECT COUNT(*) FROM graft_sink").trim == "2000")
+  }
+
+  /** The landed-vs-input check on the COPY branch: a row trigger that
+    * inserts one more row per inserted row (guarded by
+    * pg_trigger_depth, so its own insert does not fire it) doubles
+    * what lands, which the check must report. */
+  test("COPY branch: landed-vs-input mismatch throws, empty input returns 0") {
+    val l = live
+    val conn = PgWire.connect(l.target)
+    try {
+      conn.exec("DROP TABLE IF EXISTS graft_dup")
+      conn.exec("CREATE TABLE graft_dup (k bigint, s text)")
+      conn.exec("CREATE OR REPLACE FUNCTION graft_dup_row() RETURNS trigger " +
+        "LANGUAGE plpgsql AS $$ BEGIN " +
+        "INSERT INTO graft_dup VALUES (NEW.k, NEW.s); RETURN NULL; END $$")
+      conn.exec("CREATE TRIGGER graft_dup_t AFTER INSERT ON graft_dup " +
+        "FOR EACH ROW WHEN (pg_trigger_depth() < 1) EXECUTE FUNCTION graft_dup_row()")
+    } finally conn.close()
+    val df = spark.range(0, 100).selectExpr("id AS k", "concat('r-', id) AS s")
+      .repartition(3)
+    val e = intercept[IllegalStateException](PgCopySink.write(df, l.url, "graft_dup"))
+    assert(e.getMessage.contains("200 rows landed for 100 inputs"), e.getMessage)
+    assert(psql(l, "SELECT COUNT(*) FROM graft_dup").trim == "200")
+    assert(PgCopySink.write(df.filter("k < 0"), l.url, "graft_dup") == 0)
+    assert(psql(l, "SELECT COUNT(*) FROM graft_dup").trim == "200")
+  }
+
+  /** Parquet objects for the CLI specs: `n` directories under a fresh
+    * local bucket, object i holding the rows with id % n == i. */
+  private def landObjects(n: Int, rows: Long): (String, Seq[String]) = {
+    val bucket = java.nio.file.Files.createTempDirectory("pglive_bucket").toString
+    val src = spark.range(0, rows)
+      .selectExpr("id AS k", "concat('r-', id) AS s", "CAST(id AS DOUBLE) * 0.5 AS v")
+    val objects = (0 until n).map(i => f"obj_$i%02d.parquet")
+    objects.zipWithIndex.foreach { case (name, i) =>
+      src.filter(s"pmod(k, $n) = $i").write.parquet(s"$bucket/$name")
+    }
+    (bucket, objects)
+  }
+
+  private def cliConfig(connStr: String, table: String, bucket: String,
+      batch: Int, work: String): GraftConfig =
+    GraftConfig.fromYamlString(
+      s"""db:
+         |  table_name: $table
+         |  conn_str: "$connStr"
+         |s3:
+         |  bucket: $bucket
+         |  download_batch_size: $batch
+         |  downloads_dir: unused
+         |parquet:
+         |  desired_fields: [k, s, v]
+         |parquet_to_db:
+         |  k: id
+         |  s: label
+         |  v: null
+         |work_lists:
+         |  dir: $work
+         |""".stripMargin)
+
+  private def readWorkList(work: String, name: String): Seq[String] =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(work, name)), "UTF-8").linesIterator.toSeq
+
+  test("CLI pipeline: Pipeline.run loads a live table from a YAML config") {
+    val l = live
+    psql(l, "DROP TABLE IF EXISTS graft_cli")
+    psql(l, "CREATE TABLE graft_cli (id bigint, label text, v double precision)")
+    val (bucket, objects) = landObjects(4, 4000)
+    val work = java.nio.file.Files.createTempDirectory("pglive_work").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(work, "todo"),
+      objects.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val total = Pipeline.run(spark, cliConfig(l.url, "graft_cli", bucket, 2, work))
+    assert(total == 4000)
+    assert(psql(l, "SELECT COUNT(*), COUNT(DISTINCT id), SUM(id), SUM(v) FROM graft_cli").trim
+      == "4000|4000|7998000|3999000")
+    assert(psql(l, "SELECT label FROM graft_cli WHERE id = 42").trim == "r-42")
+    assert(readWorkList(work, "completed") == objects)
+    assert(readWorkList(work, "todo").isEmpty && readWorkList(work, "wip").isEmpty)
+  }
+
+  /** Crash and resume against the live server: a run strands its first
+    * batch in `wip` and dies before loading; the resumed run (libpq
+    * key/value `conn_str`, another batch size) drains `wip` first and
+    * lands every object exactly once. */
+  test("CLI pipeline: resume from a leftover wip batch lands the todo set once") {
+    val l = live
+    psql(l, "DROP TABLE IF EXISTS graft_cli_resume")
+    psql(l, "CREATE TABLE graft_cli_resume (id bigint, label text, v double precision)")
+    val (bucket, objects) = landObjects(5, 5000)
+    val work = java.nio.file.Files.createTempDirectory("pglive_resume").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(work, "todo"),
+      objects.mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(new WorkLists(work, 2).nextBatch() == objects.take(2).toVector)
+    assert(readWorkList(work, "wip") == objects.take(2))
+    val connStr =
+      s"host=${l.socketDir} port=${l.port} user=${l.user} dbname=${l.db}"
+    val total = Pipeline.run(spark,
+      cliConfig(connStr, "graft_cli_resume", bucket, 3, work))
+    assert(total == 5000)
+    assert(psql(l, "SELECT COUNT(*), COUNT(DISTINCT id), SUM(id) FROM graft_cli_resume").trim
+      == "5000|5000|12497500")
+    assert(psql(l,
+      "SELECT id % 5, COUNT(*) FROM graft_cli_resume GROUP BY 1 ORDER BY 1").trim
+      == (0 until 5).map(i => s"$i|1000").mkString("\n"))
+    assert(readWorkList(work, "completed") == objects)
+    assert(readWorkList(work, "todo").isEmpty && readWorkList(work, "wip").isEmpty)
   }
 
   test("schema-qualified target: PgCopySink resolves 'etl.t' as (schema, relation)") {

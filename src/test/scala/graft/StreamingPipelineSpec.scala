@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingPipeline
 
 /** Continuous-ingest ETL: FileStreamSource → project/cast →
-  * foreachBatch JDBC append, with checkpointed source offsets standing
-  * in for the reference's todo/wip/completed work lists. */
+  * foreachBatch load through PgCopySink.write, with checkpointed
+  * source offsets standing in for the reference's todo/wip/completed
+  * work lists. */
 class StreamingPipelineSpec extends AnyFunSuite {
   import SparkTestSession._
 
